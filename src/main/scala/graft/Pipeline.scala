@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.sources.{DatasusEtl, Sinks}
 
@@ -15,31 +18,52 @@ object Pipeline {
 
   final case class LoadReport(summary: DataFrame, perTable: DataFrame)
 
+  /** The lake's report columns with the partition columns read back as
+    * strings: competência is a zero-padded code ("0501" = 2005-01) that
+    * partition-dir type inference would read as an int. */
+  private val ReportSchema = StructType(
+    DatasusEtl.NameColumns.map(StructField(_, StringType, nullable = true)))
+
   /** @param dbcGlob input .dbc files (e.g. "s3://bucket/month/&#42;.dbc")
     * @param lakeDir partitioned parquet lake root (tipo/uf/competencia)
-    * @return the load report DataFrames (lazy; cheap to collect). */
+    * @return the load report, computed from one scan of the lake during
+    *         the call: local DataFrames, so collecting them runs no job. */
   def run(spark: SparkSession, dbcGlob: String, lakeDir: String): LoadReport = {
-    val decoded = DatasusEtl.withFileMeta(
-      spark.read.format("dbc").option("mode", "permissive").load(dbcGlob)
-        .withColumn("_path", col("_file")))
-    Sinks.writeLake(decoded, lakeDir)
+    Sinks.writeLake(decode(spark, dbcGlob), lakeDir)
 
-    // competência is a zero-padded code ("0501" = 2005-01): partition-dir
-    // type inference would read it back as an int and drop the padding
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    val lake = spark.read.parquet(lakeDir)
-    val perTable = lake.groupBy(col("tipo_arquivo").as("tabela"))
+    val perTableRows = spark.read.schema(ReportSchema).parquet(lakeDir)
+      .groupBy(col("tipo_arquivo").as("tabela"))
       .agg(count(lit(1)).as("total_registros"),
            countDistinct(col("arquivo")).as("n_arquivos"),
            round(count(lit(1)) / countDistinct(col("arquivo"))).cast("long")
              .as("media_registros"),
            sort_array(collect_set(col("competencia"))).as("competencias_existentes"))
-    val summary = perTable.agg(
-      sum(col("total_registros")).as("total_registros_inseridos"),
-      count(lit(1)).as("tabelas_distintas"),
-      sum(col("n_arquivos")).as("arquivos_processados"))
+    val rows = perTableRows.collect().toSeq
+    val perTable = local(spark, perTableRows.schema, rows)
+    // the sums are null over no rows, as sum() is
+    def total(c: String): Any =
+      if (rows.isEmpty) null else rows.map(_.getAs[Long](c)).sum
+    val summary = local(spark, StructType(Seq(
+        StructField("total_registros_inseridos", LongType),
+        StructField("tabelas_distintas", LongType, nullable = false),
+        StructField("arquivos_processados", LongType))),
+      Seq(Row(total("total_registros"), rows.length.toLong, total("n_arquivos"))))
     LoadReport(summary, perTable)
   }
+
+  /** The permissive decode with `withFileMeta`'s columns, taken from the
+    * scan's name columns (computed once per file). Each scan partition is
+    * one file, so the name columns arrive sorted and a lake write
+    * partitioned by them plans no local sort. */
+  private def decode(spark: SparkSession, dbcGlob: String): DataFrame = {
+    val raw = spark.read.format("dbc").option("mode", "permissive").load(dbcGlob)
+    val names = DatasusEtl.NameColumns
+    raw.select(raw.columns.toSeq.map(c => if (names.contains(c)) raw.metadataColumn(c) else col(c)) ++
+      names.filterNot(raw.columns.contains).map(raw.metadataColumn): _*)
+  }
+
+  private def local(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   /** The reference's actual load target — a SQL database per file type
     * with duplicate-competência protection (datasus.service.ts:15-39) —
@@ -53,10 +77,7 @@ object Pipeline {
                 textType: String = "STRING"): Map[String, (Long, Long)] = {
     // persist: the decode (blast + DBF parse) must run once, not once for
     // the tipo listing plus once per tipo table
-    val decoded = DatasusEtl.withFileMeta(
-      spark.read.format("dbc").option("mode", "permissive").load(dbcGlob)
-        .withColumn("_path", col("_file")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val decoded = decode(spark, dbcGlob).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val tipos = decoded.select("tipo_arquivo").distinct()
         .collect().map(_.getString(0)).sorted

@@ -386,8 +386,8 @@ object Etl {
     * COMPOSED result under the DuckDB oracle). Two relations feed the
     * hash: the perTable report Pipeline.run itself computes, and a
     * partition audit RE-READ from the written lake (distinct uf /
-    * competência partition values through disabled type inference — the
-    * zero-padded-competência trap), so decode, partition derivation,
+    * competência partition values; counts, so they hold under the
+    * session's partition-type inference), so decode, partition derivation,
     * the overwrite write path, and partition-typed read-back all sit
     * under one gate row. The mean is re-derived as exact integer cents
     * (the float `round` in the report column is display-only and never

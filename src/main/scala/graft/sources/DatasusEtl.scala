@@ -19,15 +19,36 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object DatasusEtl {
 
+  /** The DATASUS file-name rule (naming FLUXO_DBC.md:93-95): a base name
+    * like PAPE2501.dbc is tipo `PA`, uf `PE`, competência `2501`. */
+  val FileNameRule: String = "^([A-Z]+?)([A-Z]{2})(\\d{4})\\."
+  private val fileNamePattern = java.util.regex.Pattern.compile(FileNameRule)
+
+  /** The columns [[withFileMeta]] derives, in [[fileNameParts]]'s order. */
+  val NameColumns: Seq[String] = Seq("arquivo", "tipo_arquivo", "uf", "competencia")
+
+  /** [[NameColumns]] of one path, computed once per file by the `dbc`
+    * source: exactly `withFileMeta`'s expressions — the base name after
+    * the last `/`, and `regexp_extract`'s groups of [[FileNameRule]]
+    * (empty strings when the name does not match). */
+  def fileNameParts(path: String): Array[String] = {
+    val base = path.substring(path.lastIndexOf('/') + 1)
+    val m = fileNamePattern.matcher(base)
+    if (m.find()) Array(base, m.group(1), m.group(2), m.group(3))
+    else Array(base, "", "", "")
+  }
+
   /** P7: derive (arquivo, tipo_arquivo, uf, competencia) from DATASUS file
     * names like PAPE2501.dbc (reference response fields
-    * src/datasus/datasus.service.ts:23-27, naming FLUXO_DBC.md:93-95). */
+    * src/datasus/datasus.service.ts:23-27). The rule, [[FileNameRule]], is
+    * shared with the `dbc` source, which offers the same four columns per
+    * file as metadata columns (see [[graft.sources.v2.DbcDataSource]]). */
   def withFileMeta(df: DataFrame, pathCol: String = "_path"): DataFrame = {
     val base = element_at(split(col(pathCol), "/"), -1)
     df.withColumn("arquivo", base)
-      .withColumn("tipo_arquivo", regexp_extract(base, "^([A-Z]+?)([A-Z]{2})(\\d{4})\\.", 1))
-      .withColumn("uf", regexp_extract(base, "^([A-Z]+?)([A-Z]{2})(\\d{4})\\.", 2))
-      .withColumn("competencia", regexp_extract(base, "^([A-Z]+?)([A-Z]{2})(\\d{4})\\.", 3))
+      .withColumn("tipo_arquivo", regexp_extract(base, FileNameRule, 1))
+      .withColumn("uf", regexp_extract(base, FileNameRule, 2))
+      .withColumn("competencia", regexp_extract(base, FileNameRule, 3))
       .drop(pathCol)
   }
 

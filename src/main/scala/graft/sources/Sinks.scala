@@ -297,7 +297,9 @@ object Sinks {
   /** Partitioned parquet lake with idempotent re-loads: dynamic partition
     * overwrite replaces exactly the (tipo, uf, competencia) partitions in
     * `df`, fixing the reference's duplicate-append gap
-    * (datasus.service.ts:33 only *detects* duplicates). */
+    * (datasus.service.ts:33 only *detects* duplicates). Spark sorts each
+    * task's rows by the partition columns first unless `df` already
+    * reports that order, as the `dbc` source's per-file name columns do. */
   def writeLake(df: DataFrame, outDir: String,
                 partitionCols: Seq[String] = Seq("tipo_arquivo", "uf", "competencia")): Unit = {
     df.write

@@ -402,4 +402,64 @@ class PlanHygieneSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("the month load writes without a sort, parses names per file, and scans the lake once") {
+    import org.apache.spark.sql.catalyst.expressions.{RegExpExtract, StringSplit}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
+    import org.apache.spark.sql.execution.datasources.WriteFilesExec
+    val base = graft.queries.EtlFixtures.ensure(spark, sf)
+    val lake = java.nio.file.Files.createTempDirectory("graft_plan_lake").toFile.getPath + "/lake"
+    val plans = ExecutedPlans.of(spark) {
+      val r = Pipeline.run(spark, s"$base/RD*.dbc", lake)
+      r.summary.collect()
+      r.perTable.collect()
+    }
+    val all = plans.flatMap(ExecutedPlans.nodes)
+    // every scan partition is one file, so the partition columns arrive
+    // sorted: a local sort in front of the writer is pure waste
+    val writes = plans.filter(ExecutedPlans.nodes(_).exists(_.isInstanceOf[WriteFilesExec]))
+    assert(writes.size == 1, s"expected one lake write, got:\n${plans.mkString("\n")}")
+    assert(!ExecutedPlans.nodes(writes.head).exists(_.isInstanceOf[SortExec]),
+      s"the lake write sorts:\n${writes.head}")
+    // the name columns come from the scan, once per file
+    val parses = all.flatMap(_.expressions).flatMap(_.collect {
+      case e: RegExpExtract => e
+      case e: StringSplit => e
+    })
+    assert(parses.isEmpty, s"per-row file-name parsing: ${parses.mkString(", ")}")
+    val lakeScans = all.collect {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains(lake)) => s
+    }
+    assert(lakeScans.size == 1, s"the report scans the lake ${lakeScans.size} times")
+  }
+}
+
+
+/** The executed plans of every query `body` runs in the session,
+  * collected through a QueryExecutionListener. */
+object ExecutedPlans {
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  import org.apache.spark.sql.util.QueryExecutionListener
+
+  def of(spark: SparkSession)(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try { body; org.apache.spark.ListenerBusAccess.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(plans).asScala.toSeq
+  }
+
+  /** Every node of an executed plan, through AQE's wrappers. */
+  def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => other.children.flatMap(nodes) ++ other.subqueries.flatMap(nodes)
+  })
 }

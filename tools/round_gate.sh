@@ -14,6 +14,10 @@
 #
 # Stages (each recorded pass/fail in the summary):
 #   test        sbt -batch test                      (unit + property suites)
+#   perfbench   run.build() + python3 -m unittest discover -s perfbench/tests
+#               (builds the benchmark against this tree — it calls the
+#               sources API and Pipeline directly — then checks its
+#               generators, the .dbc month included, and metric names)
 #   verify001   graft.Verify sf0.01 + compare.py     (the driver's gate)
 #   verify01    graft.Verify sf0.1  + compare.py     (full-scale re-check)
 #   scaleaudit  sbt scaleAudit                       (CI 10x plan-flip audit)
@@ -60,7 +64,7 @@ fail_any=0
 ONLY=${ONLY:-}
 # validate --only against the known stage list (ADVICE r14: a typo'd name
 # previously skipped every stage yet still emitted a green ROUND_GATE line)
-KNOWN_STAGES="test verify001 verify01 scaleaudit recall recall100 bench benchdiff leaks"
+KNOWN_STAGES="test perfbench verify001 verify01 scaleaudit recall recall100 bench benchdiff leaks"
 if [[ -n "$ONLY" ]]; then
   IFS=',' read -ra _only_arr <<< "$ONLY"
   for _s in "${_only_arr[@]}"; do
@@ -87,6 +91,10 @@ stage() { # name cmd...
 
 # 1. unit/property suites
 stage test sbt -batch test
+
+# 1b. the benchmark still builds against this tree and its own checks hold
+# (the unit tests alone skip the .dbc month check when nothing is built)
+stage perfbench bash -c "python3 -c 'import sys; sys.path.insert(0, \"perfbench\"); import run; run.build()' && python3 -m unittest discover -s perfbench/tests"
 
 # 2. sf0.01 verify + oracle compare (the driver's correctness gate)
 stage verify001 bash -c "rm -rf $OUT/v001 && sbt -batch 'runMain graft.Verify $SF001 $OUT/v001' && python3 tools/compare.py $SF001 $OUT/v001 | tee $OUT/compare001.txt && tail -1 $OUT/compare001.txt | grep -q ' 0 fail, 0 no-oracle'"
