@@ -3,7 +3,9 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.sources.{DatasusEtl, Sinks}
@@ -29,7 +31,7 @@ object Pipeline {
     * @return the load report, computed from one scan of the lake during
     *         the call: local DataFrames, so collecting them runs no job. */
   def run(spark: SparkSession, dbcGlob: String, lakeDir: String): LoadReport = {
-    Sinks.writeLake(decode(spark, dbcGlob), lakeDir)
+    unfused(spark)(Sinks.writeLake(decode(spark, dbcGlob), lakeDir))
 
     val perTableRows = spark.read.schema(ReportSchema).parquet(lakeDir)
       .groupBy(col("tipo_arquivo").as("tabela"))
@@ -60,6 +62,19 @@ object Pipeline {
     val names = DatasusEtl.NameColumns
     raw.select(raw.columns.toSeq.map(c => if (names.contains(c)) raw.metadataColumn(c) else col(c)) ++
       names.filterNot(raw.columns.contains).map(raw.metadataColumn): _*)
+  }
+
+  /** Runs `body`, which plans and runs its queries on this thread, with
+    * whole-stage codegen off, leaving the session's conf alone. The month
+    * load's write stage only turns the scan's rows (one string column per
+    * DBF field, 92 in SIA files) into UnsafeRows. Fused, that is one
+    * generated loop the JIT takes tens of seconds to compile, and the
+    * stage runs unoptimized meanwhile; unfused, it is a generated
+    * projection split into small methods. */
+  private def unfused[T](spark: SparkSession)(body: => T): T = {
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf.clone()
+    conf.setConf(SQLConf.WHOLESTAGE_CODEGEN_ENABLED, false)
+    SQLConf.withExistingConf(conf)(body)
   }
 
   private def local(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =

@@ -24,8 +24,11 @@ object DatasusEtl {
   val FileNameRule: String = "^([A-Z]+?)([A-Z]{2})(\\d{4})\\."
   private val fileNamePattern = java.util.regex.Pattern.compile(FileNameRule)
 
+  /** The name columns a lake is partitioned by ([[Sinks.writeLake]]). */
+  val PartitionColumns: Seq[String] = Seq("tipo_arquivo", "uf", "competencia")
+
   /** The columns [[withFileMeta]] derives, in [[fileNameParts]]'s order. */
-  val NameColumns: Seq[String] = Seq("arquivo", "tipo_arquivo", "uf", "competencia")
+  val NameColumns: Seq[String] = "arquivo" +: PartitionColumns
 
   /** [[NameColumns]] of one path, computed once per file by the `dbc`
     * source: exactly `withFileMeta`'s expressions — the base name after

@@ -301,7 +301,7 @@ object Sinks {
     * task's rows by the partition columns first unless `df` already
     * reports that order, as the `dbc` source's per-file name columns do. */
   def writeLake(df: DataFrame, outDir: String,
-                partitionCols: Seq[String] = Seq("tipo_arquivo", "uf", "competencia")): Unit = {
+                partitionCols: Seq[String] = DatasusEtl.PartitionColumns): Unit = {
     df.write
       .mode("overwrite")
       // per-write option, not a session-wide conf mutation

@@ -8,8 +8,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.MetadataAttribute
-import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, MetadataAttribute}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns, SupportsReportOrdering}
@@ -34,17 +33,17 @@ import graft.sources.{DatasusEtl, Dbc, Dbf}
   *  - column pruning pushed into the record parser: only requested fields
   *    are materialized from the fixed-width rows (SupportsPushDown
   *    RequiredColumns), the row-format analog of parquet ReadSchema;
-  *  - rows are `UnsafeRow`s written straight from the decompressed record
-  *    frame: fields are trimmed at the byte level, ASCII is copied as is,
-  *    latin1 bytes 0x80–0xFF become 2-byte UTF-8, blank fields are null —
-  *    no `String` or generic row per record;
+  *  - records are framed and decoded by [[Dbf.recordsPrunedStream]]
+  *    (`.dbc`, through the Blast window) or [[Dbf.recordsPruned]] (`.dbf`),
+  *    the readers the DBF fuzz suites drive;
   *  - metadata columns, constant per file: `_file` (the source path) and
   *    the P7 name columns `arquivo`, `tipo_arquivo`, `uf`, `competencia`
   *    ([[DatasusEtl.fileNameParts]]: the rule [[DatasusEtl.withFileMeta]]
   *    applies per row, computed once per file). Because every
   *    partition is one file, the scan reports each partition as sorted by
-  *    the name columns it outputs, so a lake write partitioned by them
-  *    plans no local sort;
+  *    the name columns it outputs, lake partition columns
+  *    ([[DatasusEtl.PartitionColumns]]) first, so a lake write partitioned
+  *    by them plans no local sort;
   *  - files are listed and opened with the session's Hadoop configuration
   *    (`spark.hadoop.*` and runtime `fs.*` settings: object-store
   *    credentials, custom filesystems), shipped to the readers serialized.
@@ -106,15 +105,9 @@ class DbfDataSource extends DbcDataSource {
 object DbcTable {
   val FileColumn = "_file"
 
-  /** The name columns a lake is partitioned by. They are declared
-    * non-null (a file name always yields them, "" when it does not match
-    * the rule): Spark maps a nullable string partition column's "" to null
-    * in a projection, which would hide the order the scan reports. */
-  val PartitionNameColumns: Seq[String] = Seq("tipo_arquivo", "uf", "competencia")
-
   /** The per-file name columns, in the order the scan reports them as
     * each partition's sort order: the lake's partition columns first. */
-  val OrderedNameColumns: Seq[String] = PartitionNameColumns :+ "arquivo"
+  val OrderedNameColumns: Seq[String] = DatasusEtl.PartitionColumns :+ "arquivo"
 }
 
 class DbcTable(schema: StructType, files: Seq[String], conf: Configuration)
@@ -125,7 +118,11 @@ class DbcTable(schema: StructType, files: Seq[String], conf: Configuration)
     Set(TableCapability.BATCH_READ).asJava
 
   // the name columns carry no comment: a column taken from a metadata
-  // column keeps its comment, which a lake write stores in the file footer
+  // column keeps its comment, which a lake write stores in the file footer.
+  // The partition columns are non-null (a file name always yields them, ""
+  // when it does not match the rule): Spark maps a nullable string
+  // partition column's "" to null in a projection, which would hide the
+  // order the scan reports
   override def metadataColumns(): Array[MetadataColumn] =
     (new MetadataColumn {
       override def name(): String = DbcTable.FileColumn
@@ -134,7 +131,7 @@ class DbcTable(schema: StructType, files: Seq[String], conf: Configuration)
     } +: DatasusEtl.NameColumns.map(n => new MetadataColumn {
       override def name(): String = n
       override def dataType(): DataType = StringType
-      override def isNullable: Boolean = !DbcTable.PartitionNameColumns.contains(n)
+      override def isNullable: Boolean = !DatasusEtl.PartitionColumns.contains(n)
     })).toArray
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -201,159 +198,126 @@ class DbcReaderFactory(requiredCols: Array[String], isMeta: Array[Boolean], perm
       requiredCols, isMeta, permissive, conf.value.value)
 }
 
-/** Reads one .dbc/.dbf file into reused `UnsafeRow`s; decodes only the
-  * required fields. `permissive = true` (option mode=permissive) skips
-  * undecodable files with a warning instead of failing the task — the
-  * operational posture for multi-decade public archives with occasional
-  * corrupt members; corruption found mid-file truncates it to the rows
-  * already emitted. */
+/** Reads one .dbc/.dbf file; materializes only the required fields.
+  * `permissive = true` (option mode=permissive) skips undecodable files
+  * with a warning instead of failing the task — the operational posture
+  * for multi-decade public archives with occasional corrupt members. */
 class DbcPartitionReader(path: String, requiredCols: Array[String], isMeta: Array[Boolean],
                          permissive: Boolean, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val n = requiredCols.length
-  private val writer = new UnsafeRowWriter(n, 32 * n)
-
-  // per output position: the file's constant for a metadata column, else null
+  // per output position: the file's constant for a metadata column, else
+  // null; data columns take positions within the PRUNED record array —
+  // only required fields are ever decoded
   private val constants: Array[UTF8String] = {
     lazy val parts = DatasusEtl.NameColumns.zip(DatasusEtl.fileNameParts(path)).toMap
-    Array.tabulate(n) { i =>
-      if (!isMeta(i)) null
-      else if (requiredCols(i) == DbcTable.FileColumn) UTF8String.fromString(path)
-      else UTF8String.fromString(parts(requiredCols(i)))
+    requiredCols.zip(isMeta).map {
+      case (_, false) => null
+      case (DbcTable.FileColumn, true) => UTF8String.fromString(path)
+      case (c, true) => UTF8String.fromString(parts(c))
     }
   }
-
-  // per output position: the data field's offset in the record frame and
-  // its width; offset -1 = absent from this file (null)
-  private val fieldOff = new Array[Int](n)
-  private val fieldLen = new Array[Int](n)
-  private var frame: Array[Byte] = _
-  private var body: java.io.InputStream = _
-  private var remaining = 0 // records (live or deleted) the header still declares
-  private val utf8 = new Array[Byte](2 * 255)
-  private var dead = false
-
-  private def open(): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
-    require(len <= Int.MaxValue - 16,
-      s"dbc: file $path is $len bytes; single-stream compressed .dbc beyond 2 GB is unsupported")
-    val in = fs.open(p)
-    val bytes = try {
-      val buf = new Array[Byte](len.toInt)
-      in.readFully(0, buf)
-      buf
-    } finally in.close()
-    // .dbc: stream the DECOMPRESSED side through the bounded Blast
-    // window — the compressed input is the file's own size, but the
-    // output (the side that can blow up) never materializes
-    val header =
-      if (path.toLowerCase.endsWith(".dbc")) {
-        val (h, b) = Dbc.stream(bytes)
-        body = b
-        h
-      } else {
-        val h = Dbf.parseHeader(bytes)
-        body = new java.io.ByteArrayInputStream(bytes, h.headerSize, bytes.length - h.headerSize)
-        h
-      }
-    frame = new Array[Byte](header.recordSize)
-    remaining = header.nRecords
-    // resolve required names against THIS file's own header — under the
-    // 87-vs-92-column monthly drift a positional mapping from the first
-    // file would silently read wrong fixed-width offsets
-    val fileCols = header.fields.map(_.name.toLowerCase)
-    val offsets = header.fields.scanLeft(1)(_ + _.length) // after the deletion flag
-    var i = 0
-    while (i < n) {
-      val f = if (isMeta(i)) -1 else fileCols.indexOf(requiredCols(i))
-      fieldOff(i) = if (f < 0) -1 else offsets(f)
-      fieldLen(i) = if (f < 0) 0 else header.fields(f).length
-      i += 1
-    }
+  private val dataCols = requiredCols.zip(isMeta).collect { case (c, false) => c }
+  private val outIdx: Array[Int] = {
+    var p = -1
+    isMeta.map(m => if (m) -1 else { p += 1; p })
   }
 
-  /** Fills `frame` with the next record; false at the end of the body
-    * (short trailing bytes: padding / the 0x1A EOF marker). */
-  private def readFrame(): Boolean = {
-    var got = 0
-    while (got < frame.length) {
-      val r = body.read(frame, got, frame.length - got)
-      if (r < 0) return false
-      got += r
-    }
-    true
-  }
-
-  private def nextLive(): Boolean = {
-    while (remaining > 0 && readFrame()) {
-      remaining -= 1
-      if ((frame(0) & 0xFF) != 0x2A) return true // 0x2A = deleted
-    }
-    false
-  }
-
-  /** One field as `Dbf`'s reader sees it — latin1, trimmed of bytes
-    * <= 0x20 (what String.trim strips), null when blank — but written as
-    * UTF-8 bytes without an intermediate String. */
-  private def writeField(ordinal: Int, from: Int, width: Int): Unit = {
-    var a = from
-    val end = from + width
-    while (a < end && (frame(a) & 0xFF) <= 0x20) a += 1
-    var b = end
-    while (b > a && (frame(b - 1) & 0xFF) <= 0x20) b -= 1
-    if (a >= b) { writer.setNullAt(ordinal); return }
-    var k = a
-    while (k < b && frame(k) >= 0) k += 1
-    if (k == b) writer.write(ordinal, frame, a, b - a)
-    else {
-      System.arraycopy(frame, a, utf8, 0, k - a)
-      var o = k - a
-      while (k < b) {
-        val v = frame(k)
-        if (v >= 0) { utf8(o) = v; o += 1 }
-        else {
-          utf8(o) = (0xC0 | ((v & 0xFF) >>> 6)).toByte
-          utf8(o + 1) = (0x80 | (v & 0x3F)).toByte
-          o += 2
-        }
-        k += 1
-      }
-      writer.write(ordinal, utf8, 0, o)
-    }
-  }
-
-  private def writeRow(): Unit = {
-    writer.reset()
-    writer.zeroOutNullBytes()
-    var i = 0
-    while (i < n) {
-      val c = constants(i)
-      if (c != null) writer.write(i, c)
-      else if (fieldOff(i) < 0) writer.setNullAt(i)
-      else writeField(i, fieldOff(i), fieldLen(i))
-      i += 1
-    }
-  }
-
-  override def next(): Boolean = {
-    if (dead) return false
+  private lazy val rows: Iterator[Array[String]] =
     try {
-      if (frame == null) open()
-      if (nextLive()) { writeRow(); true } else false
+      val p = new Path(path)
+      val fs = p.getFileSystem(conf)
+      val len = fs.getFileStatus(p).getLen
+      require(len <= Int.MaxValue - 16,
+        s"dbc: file $path is $len bytes; single-stream compressed .dbc beyond 2 GB is unsupported")
+      val in = fs.open(p)
+      val bytes = try {
+        val buf = new Array[Byte](len.toInt)
+        in.readFully(0, buf)
+        buf
+      } finally in.close()
+      // .dbc: stream the DECOMPRESSED side through the bounded Blast
+      // window — the compressed input is the file's own size, but the
+      // output (the side that can blow up) never materializes
+      val (header, records) =
+        if (path.toLowerCase.endsWith(".dbc")) {
+          val (h, body) = Dbc.stream(bytes)
+          (h, (idx: Array[Int]) => Dbf.recordsPrunedStream(h, body, idx))
+        } else {
+          val h = Dbf.parseHeader(bytes)
+          (h, (idx: Array[Int]) => Dbf.recordsPruned(bytes, h, idx))
+        }
+      // resolve required names against THIS file's own header — under the
+      // 87-vs-92-column monthly drift a positional mapping from the first
+      // file would silently read wrong fixed-width offsets
+      val fileCols = header.fields.map(_.name.toLowerCase)
+      val idx = dataCols.map(c => fileCols.indexOf(c))
+      if (idx.contains(-1)) {
+        // columns absent in this file: decode the present ones, null the rest
+        val present = idx.zipWithIndex.filter(_._1 >= 0)
+        records(present.map(_._1)).map { arr =>
+          val row = new Array[String](dataCols.length)
+          present.map(_._2).zipWithIndex.foreach { case (outPos, i) => row(outPos) = arr(i) }
+          row
+        }
+      } else records(idx)
     } catch {
       case e: Exception if permissive =>
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          if (frame == null) s"dbc permissive mode: skipping undecodable file $path: ${e.getMessage}"
-          else s"dbc permissive mode: truncating corrupt file $path: ${e.getMessage}")
-        dead = true
-        false
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"dbc permissive mode: skipping undecodable file $path: ${e.getMessage}")
+        Iterator.empty
     }
+
+  /** Permissive mode must also absorb LAZY decode failures: the streaming
+    * path surfaces mid-file corruption from the iterator, not at
+    * construction. Rows decoded before the failure have already been
+    * emitted (documented semantics: a corrupt tail truncates the file). */
+  private def guarded(it: Iterator[Array[String]]): Iterator[Array[String]] =
+    if (!permissive) it
+    else new Iterator[Array[String]] {
+      // The streaming decode (Dbf.recordsPrunedStream) does its work in the
+      // underlying next() — hasNext alone throws nothing there. Prefetch in
+      // hasNext so BOTH calls are guarded: mid-file corruption truncates the
+      // iterator instead of failing the task.
+      private var dead = false
+      private var pending: Array[String] = _
+      override def hasNext: Boolean = !dead && (pending != null || {
+        try {
+          if (it.hasNext) { pending = it.next(); true } else false
+        } catch {
+          case e: Exception =>
+            org.slf4j.LoggerFactory.getLogger(getClass)
+              .warn(s"dbc permissive mode: truncating corrupt file $path: ${e.getMessage}")
+            dead = true
+            false
+        }
+      })
+      override def next(): Array[String] = {
+        if (!hasNext) throw new NoSuchElementException("next on exhausted dbc iterator")
+        val r = pending; pending = null; r
+      }
+    }
+
+  private lazy val safeRows = guarded(rows)
+
+  private var current: Array[String] = _
+
+  override def next(): Boolean = {
+    if (safeRows.hasNext) { current = safeRows.next(); true } else false
   }
 
-  override def get(): InternalRow = writer.getRow
+  override def get(): InternalRow = {
+    val vals = new Array[Any](outIdx.length)
+    var i = 0
+    while (i < outIdx.length) {
+      vals(i) = outIdx(i) match {
+        case -1 => constants(i)
+        case j => if (current(j) == null) null else UTF8String.fromString(current(j))
+      }
+      i += 1
+    }
+    new GenericInternalRow(vals)
+  }
 
   override def close(): Unit = ()
 }

@@ -403,9 +403,9 @@ class PlanHygieneSpec extends AnyFunSuite {
     }
   }
 
-  test("the month load writes without a sort, parses names per file, and scans the lake once") {
+  test("the month load writes without a sort or a fused stage, parses names per file, and scans the lake once") {
     import org.apache.spark.sql.catalyst.expressions.{RegExpExtract, StringSplit}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.datasources.WriteFilesExec
     val base = graft.queries.EtlFixtures.ensure(spark, sf)
     val lake = java.nio.file.Files.createTempDirectory("graft_plan_lake").toFile.getPath + "/lake"
@@ -421,6 +421,10 @@ class PlanHygieneSpec extends AnyFunSuite {
     assert(writes.size == 1, s"expected one lake write, got:\n${plans.mkString("\n")}")
     assert(!ExecutedPlans.nodes(writes.head).exists(_.isInstanceOf[SortExec]),
       s"the lake write sorts:\n${writes.head}")
+    // the write stage only converts the scan's wide rows: fused into one
+    // generated loop it is a method the JIT takes tens of seconds to compile
+    assert(!ExecutedPlans.nodes(writes.head).exists(_.isInstanceOf[WholeStageCodegenExec]),
+      s"the lake write runs a fused stage:\n${writes.head}")
     // the name columns come from the scan, once per file
     val parses = all.flatMap(_.expressions).flatMap(_.collect {
       case e: RegExpExtract => e
